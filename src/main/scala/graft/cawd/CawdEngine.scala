@@ -317,22 +317,14 @@ object CawdEngine {
     * Shuffles only (file, seq, content) and verifies with a streaming SHA-1
     * per group — no whole-file buffer on the reduce side.
     */
-  def reconstructionCheck(chunks: Dataset[FileChunk]): DataFrame =
-    // same top-level cover rule as reconstructTo: drop timing rows and
-    // overlay columns only — ColumnBased top-level Column chunks are data
-    reconstructionCheckRows(chunks
+  def reconstructionCheck(chunks: Dataset[FileChunk]): DataFrame = {
+    val spark = chunks.sparkSession
+    import spark.implicits._
+    chunks
+      // same top-level cover rule as reconstructTo: drop timing rows and
+      // overlay columns only — ColumnBased top-level Column chunks are data
       .filter(c => c.parentSeq != -2 &&
         !(c.chunkType == ChunkType.Column && c.parentSeq != -1))
-      .toDF())
-
-  /** Same check over an already cover-filtered chunk-content relation with
-    * at least (file, seq, content) — e.g. the c06 export table, so the
-    * DuckDB oracle and this digest consume byte-identical input.
-    */
-  def reconstructionCheckRows(chunkRows: DataFrame): DataFrame = {
-    val spark = chunkRows.sparkSession
-    import spark.implicits._
-    chunkRows
       .select(col("file"), col("seq"), col("content"))
       .as[(String, Int, Array[Byte])]
       // Externally-sorted stream per file: Spark's shuffle sort orders rows
@@ -393,22 +385,23 @@ object CawdEngine {
 
   /** Sidecar location for [[digestingExportWrite]]'s partial digests: a
     * SIBLING of the export dir (not a subdir) so the export stays a plain
-    * parquet directory for every reader — Spark's old-shape read-back, the
-    * DuckDB oracle's per-tag parquet glob — with no reliance on
-    * hidden-path filtering in any of them.
+    * parquet directory for every reader — the DuckDB oracle's per-tag
+    * parquet glob included — with no reliance on hidden-path filtering.
     */
   def digestSidecarDir(out: String): String =
     s"${out.stripSuffix("/")}__digests"
 
-  /** S7 fused (round 16): write the cover export AND digest its content in
-    * the same pass. The old c06 shape paid four linear byte passes — chunk
-    * +hash+carry, export write, export read-back + a repartition(file)
-    * exchange moving every content byte into the digest sort, and a source
-    * re-read — because [[reconstructionCheckRows]] needs each file's bytes
-    * in seq order on one task. This pass instead digests each maximal
-    * BYTE-CONTIGUOUS same-file run of cover rows AS the parquet writer
-    * pulls them, keyed on the chunks' true file offsets (chunk output is
-    * hash-partitioned by (file, ~16 MB bucket), and a partition can hold
+  /** S7 fused: write the cover export AND digest its content in the same
+    * pass. Digesting the export afterwards would cost four linear byte
+    * passes — chunk+hash+carry, export write, export read-back + a
+    * repartition(file) exchange moving every content byte into the digest
+    * sort (as [[reconstructionCheck]] does), and a source re-read — because
+    * a whole-file digest needs each file's bytes in seq order on one task
+    * (SCALE.md "Round 16: c06 fused": 4.2× on matched warm legs). This
+    * pass instead digests each maximal BYTE-CONTIGUOUS same-file run of
+    * cover rows AS the parquet writer pulls them, keyed on the chunks' true
+    * file offsets (chunk output is hash-partitioned by (file, ~16 MB
+    * bucket), and a partition can hold
     * NON-adjacent buckets of one file — the fifth-decade probe caught a
     * seq-keyed merge silently concatenating ranges across such a gap), and
     * writes the partials `(startOff, bytes, sha1, file)` to
@@ -418,7 +411,7 @@ object CawdEngine {
     * encode/decode) stays independently verified by the DuckDB oracle's
     * cumulative-offset `read_blob` comparison. At 100 TB this is the shape
     * that survives: verification parallelizes by ~[[SplitBytes]]-sized
-    * range, and the old shape's all-content exchange is gone.
+    * range, and there is no all-content exchange.
     */
   def digestingExportWrite(cover: DataFrame, out: String,
                            writeOptions: Map[String, String]): Unit = {
@@ -504,7 +497,7 @@ object CawdEngine {
     * file length while leaving a gap unchecked), then re-read each
     * original range — distributed by ~[[SplitBytes]]-sized partial, not
     * by file — and compare digests. Returns the same relation as
-    * [[reconstructionCheckRows]]: (file, file_bytes, recon_bytes,
+    * [[reconstructionCheck]]: (file, file_bytes, recon_bytes,
     * identical), identical := every range digest matches AND recon_bytes
     * == file_bytes — with disjointness and ranges bounded by EOF, that is
     * exact tiling of [0, file_bytes), i.e. whole-file byte identity.

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   *     window `row_number`, which would shuffle + sort every row);
   *   - the join back on `signature` is co-partitioned with the aggregation,
   *     so AQE plans it without an extra exchange;
-  *   - a pre-existing ("warm") store is one more `left` join on `signature`,
-  *     broadcast when small.
+  *   - a pre-existing ("warm") store is probed with the batch's distinct
+  *     signatures, pruned to the store buckets they can live in.
   *
   * Hierarchical stripe→column fallback (SURVEY.md §2.4 J5) is the same
   * construction applied twice: stripes first; the columns of MISSED stripes
@@ -57,7 +57,8 @@ object Dedup {
     *
     * @param ordCol in-file order column (`seq` for flat chunk streams,
     *               `parentSeq` for per-stripe column probes)
-    * @param store  optional warm store; membership forces hit
+    * @param store  optional warm store, as [[StreamingEngine.readStore]]
+    *               returns it (signature-bucketed); membership forces hit
     */
   def markFirstOccurrence(chunks: DataFrame, ordCol: String,
                           store: Option[DataFrame] = None): DataFrame = {
@@ -85,7 +86,7 @@ object Dedup {
       // whole store per batch) into per-batch work proportional to the
       // batch. Oversized probe sets (a backfill batch) fall back to the
       // shuffled join rather than a driver-breaking broadcast.
-      case Some(s) if s.columns.contains(StreamingEngine.SigBucketCol) =>
+      case Some(s) =>
         val probeSigs = chunks.select(col("signature")).distinct()
         // ONE driver action per probe either way. Common (bounded) case: a
         // capped collect yields the exact probe set AND its bucket set —
@@ -172,11 +173,6 @@ object Dedup {
           marked.join(hits, Seq("signature"), "left")
             .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
         }
-      case Some(s) =>
-        val sigsOnly = s.select(col("signature")).distinct()
-          .withColumn(InStoreCol, lit(true))
-        marked.join(sigsOnly, Seq("signature"), "left")
-          .withColumn(InStoreCol, coalesce(col(InStoreCol), lit(false)))
       case None => marked.withColumn(InStoreCol, lit(false))
     }
   }
@@ -253,10 +249,7 @@ object Dedup {
     * ONLY for missed stripes (they replace the stripe-data transfer).
     */
   def hierarchicalStatus(chunks: DataFrame,
-                         smallThreshold: Long = 2L * Sha1.Size,
-                         stripeStore: Option[DataFrame] = None,
-                         columnStore: Option[DataFrame] = None,
-                         footerStore: Option[DataFrame] = None): DataFrame = {
+                         smallThreshold: Long = 2L * Sha1.Size): DataFrame = {
     // every data row participates (Column subchunks AND linked index/footer
     // chunks carry parentSeq != -1); only timing side-channel rows drop out
     val top = chunks
@@ -276,7 +269,7 @@ object Dedup {
       .agg(count(lit(1)).as("__n_cols"))
       .filter(col("__n_cols") >= 2)
       .drop("__n_cols")
-    val stripeStatus = markFirstOccurrence(stripes, "seq", stripeStore)
+    val stripeStatus = markFirstOccurrence(stripes, "seq")
       .join(stripesWithCols,
         col("file") === col("c_file") && col("seq") === col("c_parent"), "left")
       .withColumn("status",
@@ -315,14 +308,14 @@ object Dedup {
     val bigCols = columnsOfMissed.filter(col("size") > smallThreshold)
     val smallCols = columnsOfMissed.filter(col("size") <= smallThreshold)
       .withColumn("status", lit("small"))
-    val colStatus = markFirstOccurrence(bigCols, "parentSeq", columnStore)
+    val colStatus = markFirstOccurrence(bigCols, "parentSeq")
       .withColumn("status",
         when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
       .drop(IsFirstCol, InStoreCol)
 
     // 4. file footers probe their own store
     val footers = top.filter(col("chunkType") === ChunkType.FileFooter)
-    val footerStatus = markFirstOccurrence(footers, "seq", footerStore)
+    val footerStatus = markFirstOccurrence(footers, "seq")
       .withColumn("status",
         when(col(InStoreCol) || !col(IsFirstCol), lit("hit")).otherwise(lit("miss")))
       .drop(IsFirstCol, InStoreCol)

@@ -112,7 +112,8 @@ object RelationalQueries {
     }),
 
     // A2: two-level rollup (per-group + global), like globalStats' re-aggregation.
-    // Round 17 (R16Probe q02roll, fifth decade): Catalyst plans rollup()
+    // SCALE.md "Round 17: the r16 probe program, executed" (q02roll, fifth
+    // decade): Catalyst plans rollup()
     // as Expand — every lineitem row TRIPLED before the hash aggregate
     // (one copy per grouping set). The base (flag, status) aggregate has
     // ~10 groups, so the two derived levels re-aggregate 10 tiny rows
@@ -169,7 +170,8 @@ object RelationalQueries {
       val rev = sum(dec(col("l_extendedprice")) *
         (lit(1).cast("decimal(4,2)") - dec(col("l_discount"), "decimal(4,2)")))
       if (dimBroadcastable(s, d, "customer")) {
-        // Round 17 (R16Probe q04bc, fifth decade, warm paired legs):
+        // SCALE.md "Round 17: the r16 probe program, executed" (q04bc,
+        // fifth decade, warm paired legs):
         // customer projected to (c_custkey, n_name) broadcasts into the
         // l⋈o output stage and the aggregate regroups by n_name directly —
         // map-side partials collapse to 25 rows/partition and the custkey
@@ -197,7 +199,8 @@ object RelationalQueries {
       // <=15 M at the fifth decade). Exact-decimal partial sums keep the
       // oracle hash identical.
       //
-      // MEASURED NO-WIN (round 14, CostCenterProbe q04pre, fifth decade):
+      // MEASURED NO-WIN (SCALE.md "q04's one untried idea measured", fifth
+      // decade):
       // applying the same trick one join earlier — partial-aggregate by
       // l_orderkey BEFORE this join — compresses the orderkey exchange
       // 4.07x (600 M -> 147.2 M rows, lineitem is orderkey-clustered) but
@@ -244,7 +247,8 @@ object RelationalQueries {
       val o = orders(s, d); val c = customer(s, d)
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      // Round 17 (R16Probe q07bc, fifth decade, warm paired legs):
+      // SCALE.md "Round 17: the r16 probe program, executed" (q07bc, fifth
+      // decade, warm paired legs):
       // customer projected to (c_custkey, c_mktsegment) broadcasts into
       // the orders scan stage, so the o⋈c custkey exchange and both SMJ
       // sorts disappear and the partial WindowGroupLimit runs directly on

@@ -139,8 +139,8 @@ object StreamingQueries {
     * of these local-mode drains hold kilobytes of state per partition — 32
     * near-empty stores are pure overhead. The EXCEPTION is a query whose
     * state is corpus-sized: s05's interval join buffers every click+view
-    * row (39.8 M rows / 8.5 GB at the fifth decade), and S05Profile
-    * (round 14) measured its cost to be state-store update time — 439 s
+    * row (39.8 M rows / 8.5 GB at the fifth decade), and its cost is
+    * state-store update time (SCALE.md "s05 probed the way s01 was") — 439 s
     * of summed per-task updates serialized onto 8 stores ≈ 55 s of wall —
     * with micro-batch machinery at 0.77 s. Such a query passes
     * `stateParts = defaultParallelism` so the state work spreads across
@@ -167,14 +167,15 @@ object StreamingQueries {
   }
 
   /** State-store provider for the drains. Default: Spark's default
-    * (HDFSBackedStateStoreProvider — all state on-heap). S05Profile
-    * (round 14) measured the corpus-sized drains to be state-store-update
-    * bound (~926 s summed update time for 39.8 M buffered rows / 8.5 GB at
-    * the fifth decade, ~23 µs/row incl. the UnsafeRow copy), which is the
-    * regime `RocksDBStateStoreProvider` targets on real clusters (off-heap
-    * native state, no per-update deep copy). Probed round 15 at the fifth
-    * decade via this env knob (GRAFT_STREAM_STATE_PROVIDER=rocksdb|hdfs|
-    * <fqcn>): see SCALE.md for the measurement and the adopt/reject call.
+    * (HDFSBackedStateStoreProvider — all state on-heap). The corpus-sized
+    * drains are state-store-update bound (~926 s summed update time for
+    * 39.8 M buffered rows / 8.5 GB at the fifth decade, ~23 µs/row incl.
+    * the UnsafeRow copy), which is the regime `RocksDBStateStoreProvider`
+    * targets on real clusters (off-heap native state, no per-update deep
+    * copy). The deployment setting GRAFT_STREAM_STATE_PROVIDER=rocksdb|
+    * hdfs|<fqcn> selects one; SCALE.md "RocksDB state-store provider probed
+    * for the corpus-sized drains" holds the measurement and the reject
+    * call.
     * Caveat on the committed 3.4× number: it was measured with changelog
     * checkpointing OFF (the Spark default). Enabling
     * `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`
@@ -184,8 +185,7 @@ object StreamingQueries {
     * under either configuration while state fits the heap.
     */
   private def stateProviderClass: Option[String] =
-    sys.props.get("graft.stream.provider")
-      .orElse(sys.env.get("GRAFT_STREAM_STATE_PROVIDER")).map {
+    sys.env.get("GRAFT_STREAM_STATE_PROVIDER").map {
       case "rocksdb" =>
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       case "hdfs" =>
@@ -320,20 +320,15 @@ object StreamingQueries {
       // and order-independent by design (Long micros), so a partition-local
       // pre-fold (event_type → (n, Σmicros), ≤5 rows per partition per
       // batch) can shrink both the exchange and the state-update row count
-      // by ~|batch|/5·parts. Knob (-Dgraft.s03.prefold=0/1) exists so
-      // CostCenterProbe measures both shapes through the identical drain
-      // harness; the DEFAULT is the measured winner (see SCALE.md round 15).
-      val preFold = sys.props.get("graft.s03.prefold").forall(_ != "0")
+      // by ~|batch|/5·parts (SCALE.md "s03's 5-key exchange pre-folded":
+      // 8.2× over the per-row shape, warm, at the fifth decade).
       drainToMemory(s, "s03",
         name => {
-          val src = eventsStream(s, d)
+          eventsStream(s, d)
             .select(col("event_type"),
               round(col("value") * 1e6, 0).cast("long").as("micros"))
             .as[(String, Long)]
-          val partials: org.apache.spark.sql.Dataset[(String, Long, Long)] =
-            if (preFold) src.mapPartitions(preFoldTypes _)
-            else src.map { case (t, us) => (t, 1L, us) }
-          partials
+            .mapPartitions(preFoldTypes _)
             .groupByKey(_._1)
             .mapGroupsWithState[TypeState, (String, Long, Double)](
               org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
@@ -415,7 +410,8 @@ object StreamingQueries {
       },
       _.orderBy("click_id", "view_id"),
       // corpus-sized join state: one store per core at the fifth decade
-      // (S05Profile: the 8-store drain was state-update-bound at 82.8 s
+      // (SCALE.md "s05 probed the way s01 was": the 8-store drain was
+      // state-update-bound at 82.8 s
       // warm, 52.9 s at 32 stores), 8 at sf0.1-and-smaller (32 near-empty
       // stores measured 4.5x the drain cost at sf0.01)
       stateParts = sizedStateParts(s, d))),

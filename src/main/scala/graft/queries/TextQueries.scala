@@ -156,8 +156,8 @@ object TextQueries {
     * and it feeds FOUR near-dup pipelines (d05 prefix+verify, d06/d10/d22
     * shingle sets and minhash input), so a real pipeline materializes the
     * shingle pass once per corpus instead of once per query per JVM —
-    * round-7 profiling (D22Probe) measured candidate GENERATION, not
-    * verification, as ~80% of d22's 100× cost, and d06 recomputed the
+    * candidate GENERATION, not verification, is ~80% of d22's 100× cost
+    * (SCALE.md "d22 decomposition at 100×"), and d06 recomputed the
     * identical tables. Validity is decided by the content key (corpus hash
     * + [[FingerprintVersion]]), never by session lifetime.
     */
@@ -222,7 +222,8 @@ object TextQueries {
     * the all-pairs definition the oracle computes.
     *
     * SHELF TRIGGER for PPJoin+'s positional filter (pins the premise the
-    * shelf decision rests on — D05Probe, round 13, fifth decade): the
+    * shelf decision rests on — SCALE.md "The two dominant cold terms
+    * decomposed", fifth decade): the
     * dominant cold term is the exact-VERIFY join (~160-237 s of the
     * 215.9 s fused build) and it scales with the CANDIDATE count, not
     * corpus size — this corpus's 1000×-replica structure gives every doc
@@ -515,7 +516,8 @@ object TextQueries {
          |      ' call +1-555-', lpad(CAST(doc_id % 10000 AS $cast), 4, '0')) AS t
          |  FROM documents)""".stripMargin
     if (spark)
-      // Round 17 (R16Probe d20split, fifth decade): the count+replace
+      // SCALE.md "Round 17: the r16 probe program, executed" (d20split,
+      // fifth decade): the count+replace
       // shape paid FOUR regex scans of the text per row (two
       // regexp_extract_all + two regexp_replace). split() yields count
       // and replacement in ONE scan: for a pattern that cannot match the
@@ -775,9 +777,9 @@ object TextQueries {
     // estimation error (~1/√k). Sketch building is one distinct-aggregate
     // then a per-group top-k — mergeable across partitions, the standard
     // sketch shape.
-    // Spark plan (round 11 — D14Probe decomposed the 232.9 s fifth-decade
-    // cost: narrow explode+md5 13.9 s, global distinct 74 s, per-lang
-    // window rank over ALL 108 M distinct hashes ~145 s): the kth-minimum
+    // Spark plan (SCALE.md "d14's 232.9 s decomposed and cut": narrow
+    // explode+md5 13.9 s, global distinct 74 s, per-lang window rank over
+    // ALL 108 M distinct hashes ~145 s at the fifth decade): the kth-minimum
     // of a UNIFORM hash column doesn't need a full rank — every value at
     // rank ≤ k has fraction(h) below ~k/n, so a narrow prefilter at
     // 8·k/n keeps the kth min with certainty-for-all-practical-purposes
@@ -1023,7 +1025,8 @@ object TextQueries {
     // compared prefix or switch to a bit-parallel Myers kernel.
     //
     // SHELF TRIGGER for the Myers kernel (pins the premise the shelf
-    // decision rests on — D22Probe, round 12): the banded-DP term is
+    // decision rests on — SCALE.md "Next cost tier attributed: d22 is
+    // DP-kernel-bound"): the banded-DP term is
     //   cells ≈ pairs × k × avg_len,  k = floor((1−t)·avg_len)+1,
     // and runs at ~1×10⁹ cells/s on this 32-thread box (339 638 pairs ×
     // 113 × 562 ≈ 2.1×10¹⁰ cells = 21 s measured). It scales with the LSH
@@ -1035,9 +1038,9 @@ object TextQueries {
     // about the query changes (same candidates, same verify filter).
     "d22_editdist_pairs" -> ((s, d) => {
       val df = documents(s, d)
-      // shared per-corpus fingerprint table: round-7 attribution (D22Probe)
-      // put ~80% of d22's 100× cost in minhash GENERATION that d06 was
-      // recomputing identically — both now read [[minhashBandsOf]]
+      // shared per-corpus fingerprint table: ~80% of d22's 100× cost was
+      // minhash GENERATION that d06 recomputed identically (SCALE.md "d22
+      // decomposition at 100×") — both now read [[minhashBandsOf]]
       val bands = minhashBandsOf(s, d)
       val cands = bands.as("a")
         .join(bands.as("b"),

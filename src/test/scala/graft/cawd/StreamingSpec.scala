@@ -182,6 +182,41 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("store probe: chunked In pushdown and the over-cap semi join both " +
+    "equal set membership") {
+    val spark = GraftSession.get("store-probe-spec")
+    import spark.implicits._
+    val store = Files.createTempDirectory("store-probe-spec").toString
+    def sig(i: Int): Array[Byte] =
+      java.security.MessageDigest.getInstance("SHA-1").digest(s"chunk-$i".getBytes)
+    val rng = new scala.util.Random(7)
+    val (stored, absent) = rng.shuffle((0 until 8000).toVector).splitAt(4000)
+    StreamingEngine.writeStorePartition(
+      stored.map(i => (sig(i), "DataPageV1", 10L)).toDF("signature", "chunkType", "size"),
+      s"$store/batch=0", clusterBuckets = true)
+
+    // half in the store, half not: ~1 500 sigs take the In pushdown across
+    // several InPushdownChunk-sized scans; ~5 000 exceed MaxInPushdownSigs
+    // and take the bucket-pruned semi join
+    val (inPushdown, overCap) = (1500, 5000)
+    assert(inPushdown > Dedup.InPushdownChunk &&
+      inPushdown <= Dedup.MaxInPushdownSigs && overCap > Dedup.MaxInPushdownSigs,
+      "probe sizes must straddle the pushdown thresholds")
+    val storedSet = stored.toSet
+    for (n <- Seq(inPushdown, overCap)) {
+      val ids = rng.shuffle(stored.take(n / 2) ++ absent.take(n - n / 2))
+      val probe = ids.map(i => ("f", 0, i, sig(i)))
+        .toDF("file", "fileRank", "seq", "signature")
+      val rows = Dedup.markFirstOccurrence(probe, "seq",
+        StreamingEngine.readStore(spark, store))
+        .select(col("seq"), col(Dedup.InStoreCol)).collect()
+      assert(rows.length == ids.size, s"$n-sig probe lost or duplicated rows")
+      val inStore = rows.map(r => r.getInt(0) -> r.getBoolean(1)).toMap
+      assert(ids.forall(i => inStore(i) == storedSet(i)),
+        s"$n-sig probe disagrees with set membership")
+    }
+  }
+
   test("retention evicts old batches; retained signatures still hit") {
     val spark = GraftSession.get("streaming-retain-spec")
     import spark.implicits._

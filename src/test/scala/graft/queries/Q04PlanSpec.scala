@@ -8,8 +8,9 @@ import graft.{GraftSession, SparkEntry}
   *
   * Within the dimension-broadcast budget the customer⋈nation projection is
   * BROADCAST into the lineitem⋈orders output and the aggregate groups by
-  * n_name directly — no custkey exchange tier at all (R16Probe q04bc:
-  * 160.8/109.2 s shipped vs 86.8 s at the fifth decade). Beyond the budget
+  * n_name directly — no custkey exchange tier at all (SCALE.md "Round 17:
+  * the r16 probe program, executed", q04bc: 160.8/109.2 s shipped vs
+  * 86.8 s at the fifth decade). Beyond the budget
   * (-Dgraft.dimBroadcastMaxBytes) the query falls back to the per-custkey
   * partial aggregate BETWEEN the two big joins, whose loss would re-send
   * every lineitem row through the custkey exchange (600 M rows / ~47 s at

@@ -79,8 +79,8 @@ class SemDedupCapSpec extends AnyFunSuite {
 
   test("cellExpr retune knob: finer clustering drops a subset of the " +
     "all-pairs reference; default is the production sqrt(N)") {
-    // round-11 retune seam: semanticDedupSql(cellExpr = ...) sweeps the
-    // cell count (E05CellProbe measures the cost/quality tradeoff at 2 M
+    // retune seam: semanticDedupSql(cellExpr = ...) sweeps the cell count
+    // (SCALE.md "e05 cell-count retune measured": cost vs quality at 2 M
     // vectors). Property: ANY clustering's drop set is a subset of the
     // uncapped single-cell (all-pairs) reference — dropping needs a
     // smaller-id cos≥t neighbor in the SAME cell, and the single cell
